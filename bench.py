@@ -157,7 +157,7 @@ def main() -> None:
         cpu = _med(
             lambda: noop(
                 spark.range(100_000_000, numPartitions=64).selectExpr(
-                    "sum(xxhash64(id)) AS s"
+                    "bit_xor(xxhash64(id)) AS s"
                 )
             )
         )

@@ -38,7 +38,7 @@ from cdc_worker_spark.operators.index_layout import (
     live_paths,
     next_generation,
     publish_generation,
-    publish_segment,
+    publish_segments,
     segment_registered,
 )
 
@@ -82,18 +82,28 @@ def extend_dedup_index(docs: DataFrame, path: str, token: str | None = None) -> 
     and rewrites any half-written unregistered debris — the crash-mid-
     append double-count of a plain parquet append cannot happen. With no
     token a unique one is generated (crash-safe but not replay-dedupable:
-    the caller can't re-identify the attempt)."""
+    the caller can't re-identify the attempt). All three segments register
+    in one pointer publish, so readers never see a partial append."""
     if token is None:
         import uuid
 
         token = uuid.uuid4().hex
     digests, sigs, bands = _index_frames(docs)
-    for table, df in (("digests", digests), ("signatures", sigs),
-                      ("bands", bands)):
-        if segment_registered(path, table, token):
-            continue  # replay of a fully-committed append: no-op
-        df.write.parquet(begin_segment(path, table, token))
-        publish_segment(path, table, token)
+    todo = [
+        (table, df)
+        for table, df in (("digests", digests), ("signatures", sigs),
+                          ("bands", bands))
+        # registered already: replay of a committed append, a no-op
+        if not segment_registered(path, table, token)
+    ]
+    if not todo:
+        return
+
+    def write() -> None:
+        for table, df in todo:
+            df.write.parquet(begin_segment(path, table, token))
+
+    publish_segments(path, [table for table, _ in todo], token, write)
 
 
 def compact_dedup_index(

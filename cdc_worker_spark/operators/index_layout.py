@@ -1,30 +1,35 @@
-"""Manifest-pointer layout for materialized index tables.
+"""The engine's one crash-safe commit protocol, and the manifest-pointer
+layout for materialized index tables built on it.
+
+:func:`publish` is the only place the engine replaces a file: it runs the
+commit's data write (files no reader resolves yet), then writes the commit
+record to a hidden temp file and renames it over the live name (a single
+object PUT on S3/GCS). Every manifest, pointer, ledger, offset and
+wire file goes through it — the bucketed state tables
+(streaming/pipeline.py ``BucketedTable``), the ingest ledger, the bridge's
+committed offset, the bus files, and the index pointer below. A crash
+anywhere before the replace leaves readers on the previous record; a
+crash after it leaves the new one. Replace is atomic against a process
+crash; the temp file is not fsynced, so host power loss is out of scope.
 
 The dedup and IVF indexes (operators/dedup_index.py, operators/ivf.py) are
 long-lived on-disk layouts that get appended to on every ingest batch and
-compacted on a maintenance cadence. The r4-era code mutated the live
-directories directly (`mode("append")` into the table, compaction via two
-``os.rename`` calls) — which double-counts rows when a crashed append
-replays, and breaks entirely on object stores (no rename). This module
-gives each table the same manifest discipline the streaming state store
-uses (streaming/pipeline.py: `_write_manifest`), in miniature:
+compacted on a maintenance cadence:
 
 - ``_CURRENT.json`` in the index root maps each logical table to
   ``{"base": <dir>, "segments": [<dir>, ...]}``; readers scan the union.
   A missing pointer (or a table absent from it) resolves to the plain
   directory name, so pre-pointer indexes keep working unchanged.
 - Appends write a NEW segment directory named by an idempotency token
-  (invisible to readers), then register it in the pointer with one atomic
-  replace (``os.replace`` locally — a single object PUT on S3/GCS). A
-  replayed append with the same token is a no-op if already registered,
-  and overwrites the unregistered debris if the first attempt crashed
-  mid-write: appends are exactly-once.
+  (invisible to readers), then register it in the pointer with one
+  :func:`publish`. A replayed append with the same token is a no-op if
+  already registered, and overwrites the unregistered debris if the first
+  attempt crashed mid-write: appends are exactly-once.
 - Compaction reads the union, writes a new base generation, publishes
   ``{"base": gen, "segments": []}`` in one flip, then garbage-collects
   every unreferenced directory.
 - At NO point is the table unreadable, and no reader ever sees a
-  half-written directory — the two failure modes the mutate-in-place
-  layout had.
+  half-written directory.
 
 Writers (append/compact) still assume single-writer-per-table (the ingest
 loop is serial per index; compaction is offline maintenance); readers are
@@ -78,16 +83,26 @@ def read_pointer(root: str) -> dict:
 def read_meta(root: str) -> dict:
     """The pointer's layout-metadata entry ({} when absent). Reading it
     and the table entries from the same file is what makes a layout
-    migration atomic for readers: one ``os.replace`` flips both."""
+    migration atomic for readers: one :func:`publish` flips both."""
     v = _read_raw(root).get(META_KEY, {})
     return dict(v) if isinstance(v, dict) else {}
 
 
-def _write_pointer(root: str, cur: dict) -> None:
-    tmp = _pointer_path(root) + ".tmp"
+def publish(path: str, record, write=None) -> None:
+    """Commit ``record`` at ``path``: run ``write`` (the data the record
+    points at, laid down where no reader looks yet), then atomically
+    replace ``path`` with the record — a str verbatim, anything else as
+    JSON. The temp file is hidden (leading dot), so a file source
+    listing the directory mid-commit never picks it up."""
+    if write is not None:
+        write()
+    head, name = os.path.split(path)
+    if head:
+        os.makedirs(head, exist_ok=True)
+    tmp = os.path.join(head, f".{name}.tmp")
     with open(tmp, "w") as f:
-        json.dump(cur, f)
-    os.replace(tmp, _pointer_path(root))
+        f.write(record if isinstance(record, str) else json.dumps(record))
+    os.replace(tmp, path)
 
 
 def _entry(root: str, table: str) -> dict:
@@ -150,18 +165,26 @@ def begin_segment(root: str, table: str, token: str) -> str:
     return path
 
 
+def publish_segments(root: str, tables, token: str, write=None) -> None:
+    """Atomically register the ``token`` segment of every table in
+    ``tables`` in one pointer PUT, after ``write`` lays their data down —
+    readers see all of them or none."""
+    cur = _read_raw(root)  # raw: preserve META_KEY and untouched entries
+    for table in tables:
+        e = cur.get(table, {"base": table, "segments": []})
+        if isinstance(e, str):  # v1 entry being appended to: normalize it
+            e = {"base": e, "segments": []}
+        name = segment_name(table, token)
+        segments = list(e["segments"])
+        if name not in segments:
+            segments.append(name)
+        cur[table] = {"base": e["base"], "segments": segments}
+    publish(_pointer_path(root), cur, write=write)
+
+
 def publish_segment(root: str, table: str, token: str) -> None:
     """Atomically register a fully-written segment (one pointer PUT)."""
-    cur = _read_raw(root)  # raw: preserve META_KEY and untouched entries
-    e = cur.get(table, {"base": table, "segments": []})
-    if isinstance(e, str):  # v1 entry being appended to: normalize it
-        e = {"base": e, "segments": []}
-    e = {"base": e["base"], "segments": list(e["segments"])}
-    name = segment_name(table, token)
-    if name not in e["segments"]:
-        e["segments"].append(name)
-    cur[table] = e
-    _write_pointer(root, cur)
+    publish_segments(root, [table], token)
 
 
 def publish_generation(root: str, table: str, gen_name: str) -> None:
@@ -169,7 +192,7 @@ def publish_generation(root: str, table: str, gen_name: str) -> None:
     segment list (compaction folded them in)."""
     cur = _read_raw(root)
     cur[table] = {"base": gen_name, "segments": []}
-    _write_pointer(root, cur)
+    publish(_pointer_path(root), cur)
 
 
 def publish_generations(
@@ -179,7 +202,7 @@ def publish_generations(
     a partitioned snapshot needs: when a fold moves rows between bucket
     tables, publishing buckets one at a time would expose a window where
     a row has left its source bucket but not yet appeared in its
-    destination. One ``os.replace`` (a single object PUT) keeps every
+    destination. One :func:`publish` (a single object PUT) keeps every
     reader on an all-old or all-new view; a crash before it leaves only
     unreferenced debris for gc_generations.
 
@@ -204,7 +227,7 @@ def publish_generations(
             cur[META_KEY] = m
         else:
             cur.pop(META_KEY, None)
-    _write_pointer(root, cur)
+    publish(_pointer_path(root), cur)
 
 
 def drop_table(root: str, table: str) -> None:
@@ -221,7 +244,7 @@ def drop_table(root: str, table: str) -> None:
     cur = _read_raw(root)
     if table in cur:
         del cur[table]
-        _write_pointer(root, cur)
+        publish(_pointer_path(root), cur)
     for name in os.listdir(root):
         if name == table or name.startswith(table + ".g") or name.startswith(
             table + ".s-"

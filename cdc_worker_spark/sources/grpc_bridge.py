@@ -33,6 +33,8 @@ from collections.abc import Iterator
 from dataclasses import dataclass, field
 from typing import Protocol
 
+from cdc_worker_spark.operators import index_layout
+
 
 class SubscribeTransport(Protocol):
     """The wire seam. ``fetch`` yields FetchResponse-like dicts:
@@ -88,12 +90,9 @@ class BridgeStatus:
 
 def commit_offset(path: str, replay_id_b64: str) -> None:
     """A6 managed-subscription commit (client.js:515-541 commitReplayId):
-    durably record the replay id to resume from. Atomic tmp-then-rename so
+    durably record the replay id to resume from. One atomic publish, so
     a crash mid-write never corrupts the stored offset."""
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(replay_id_b64)
-    os.rename(tmp, path)
+    index_layout.publish(path, replay_id_b64)
 
 
 def load_committed_offset(path: str) -> str | None:
@@ -117,7 +116,7 @@ def run_subscribe_bridge(
 ) -> BridgeStatus:
     """Drain the subscribe stream into ``inbox_dir``.
 
-    Each FetchResponse becomes one jsonl file written tmp-then-rename, so
+    Each FetchResponse becomes one jsonl file published atomically, so
     the Spark file source never observes a partial batch (the same atomic
     handoff as the publish sinks). Flow control mirrors the reference: the
     outstanding-event semaphore starts at ``num_requested`` and a new
@@ -132,20 +131,20 @@ def run_subscribe_bridge(
         if events:
             name = f"{topic.replace('/', '_')}-{uuid.uuid4().hex}.jsonl"
             path = os.path.join(inbox_dir, name)
-            tmp = path + ".tmp"
-            with open(tmp, "w") as fh:
-                for e in events:
-                    fh.write(
-                        json.dumps(
-                            {
-                                "replay_id_b64": e["replay_id_b64"],
-                                "schema_id": e["schema_id"],
-                                "payload": e["payload"],
-                            }
-                        )
-                        + "\n"
+            index_layout.publish(  # atomic appear
+                path,
+                "".join(
+                    json.dumps(
+                        {
+                            "replay_id_b64": e["replay_id_b64"],
+                            "schema_id": e["schema_id"],
+                            "payload": e["payload"],
+                        }
                     )
-            os.rename(tmp, path)  # atomic appear
+                    + "\n"
+                    for e in events
+                ),
+            )
             status.files.append(path)
             status.received += len(events)
             status.last_replay_id_b64 = events[-1]["replay_id_b64"]

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_worker_spark.functions.offsets import encode_replay_id
+from cdc_worker_spark.operators import index_layout
 from cdc_worker_spark.streaming.envelope import ENVELOPE_SCHEMA, decode_envelope
 from cdc_worker_spark.streaming.pipeline import read_event_stream
 
@@ -113,15 +114,15 @@ def publish_batch(
     """C7: append a batch of payloads to the bus as one file, assigning
     consecutive replay ids; returns the assigned ids (the PublishResult
     replay ids, client.js:584). Correlation key -> file name (message key)."""
-    os.makedirs(bus_dir, exist_ok=True)
     ids = list(range(next_replay_id, next_replay_id + len(events)))
     name = f"{correlation_key or uuid.uuid4().hex}.jsonl"
-    path = os.path.join(bus_dir, name)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        for rid, payload in zip(ids, events):
-            f.write(json.dumps(make_wire_envelope(rid, payload)) + "\n")
-    os.rename(tmp, path)  # atomic appear: the file source never sees partials
+    index_layout.publish(  # atomic appear: the file source never sees partials
+        os.path.join(bus_dir, name),
+        "".join(
+            json.dumps(make_wire_envelope(rid, payload)) + "\n"
+            for rid, payload in zip(ids, events)
+        ),
+    )
     return ids
 
 

@@ -23,6 +23,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cdc_worker_spark.operators import index_layout
 from cdc_worker_spark.operators.dedup_index import (
     _digest,
     build_dedup_index,
@@ -332,7 +333,7 @@ def write_label_snapshot(
     )
     # ONE atomic pointer write commits the bucket generations AND the
     # bucket count (pointer meta): declare, grow, and shrink migrations
-    # all flip in a single os.replace, so a concurrent reader resolves
+    # all flip in a single pointer publish, so a concurrent reader resolves
     # either (old count, old generations) or (new count, new
     # generations) — never a mixed layout/pointer view (ADVICE r11). A
     # crash before it leaves readers on the previous complete layout
@@ -871,62 +872,68 @@ def run_dedup_ingest_pipeline(
 
     committed_path = os.path.join(checkpoint_dir, "_ingest_committed")
 
-    def _committed() -> set[int]:
-        try:
-            with open(committed_path) as fh:
-                return {int(line) for line in fh if line.strip()}
-        except FileNotFoundError:
-            return set()
-
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch is at-least-once: after a crash between the sink
         # writes and the checkpoint commit, the same batch_id replays. The
-        # committed-batch ledger makes the replay a no-op, so corpus/index
-        # appends are effectively exactly-once (the ledger write is the
-        # last step; a crash before it re-runs the batch, whose duplicate
-        # corpus rows the downstream exact dedup absorbs — the narrow
-        # remaining window of the standard recipe).
-        if batch_id in _committed():
+        # ledger (the committed batch ids, one per line) is published with
+        # the batch's writes as its data, so a committed batch replays as
+        # a no-op. A crash before the publish re-runs the batch; once the
+        # crashed attempt's index extend (token b<batch_id>) is published,
+        # its corpus and reject appends had landed too, so the replay
+        # skips them, and the probe drops the docs already indexed.
+        try:
+            with open(committed_path) as fh:
+                committed = {int(line) for line in fh if line.strip()}
+        except FileNotFoundError:
+            committed = set()
+        if batch_id in committed:
             return
         t_batch = time.perf_counter()
-        accepted, rejected = dedup_batch_against_index(
-            spark, index_dir, batch_df, near_policy=near_policy
-        )
-        # materialize the split BEFORE mutating the index: both sides derive
-        # from the same probe joins, and extending first would change what a
-        # recomputed `accepted` sees
-        accepted = accepted.localCheckpoint(eager=True)
-        rejected = rejected.localCheckpoint(eager=True)
-        rejected.write.mode("append").parquet(rejects_dir)
-        accepted.write.mode("append").parquet(corpus_dir)
-        # batch_id as the idempotency token: if the ledger write below
-        # crashes and the batch replays, the index extend is a no-op at
-        # the segment layer too (exactly-once, not just at-least-once)
-        extend_dedup_index(accepted, index_dir, token=f"b{batch_id}")
         label_sec = None
         layout_event = None
-        if near_policy == "label":
-            t_lbl = time.perf_counter()
-            fold_stats: dict = {}
-            if label_cadence <= 1:
-                _extend_labels(batch_df, rejected, fold_stats)
-            else:
-                _spool_delta(batch_df, rejected, f"b{batch_id}")
-                if _pending_segment_count(index_dir) >= label_cadence:
-                    fold_pending_labels(
-                        spark, index_dir, corpus_dir, stats=fold_stats
-                    )
-            layout_event = _auto_layout(fold_stats)
-            label_sec = round(time.perf_counter() - t_lbl, 3)
-        with open(committed_path, "a") as fh:
-            fh.write(f"{batch_id}\n")
+
+        def write() -> None:
+            nonlocal label_sec, layout_event
+            accepted, rejected = dedup_batch_against_index(
+                spark, index_dir, batch_df, near_policy=near_policy
+            )
+            # materialize the split BEFORE mutating the index: both sides
+            # derive from the same probe joins, and extending first would
+            # change what a recomputed `accepted` sees
+            accepted = accepted.localCheckpoint(eager=True)
+            rejected = rejected.localCheckpoint(eager=True)
+            # batch_id as the idempotency token: a replay of this batch
+            # re-registers nothing at the segment layer
+            token = f"b{batch_id}"
+            if not index_layout.segment_registered(index_dir, "digests", token):
+                rejected.write.mode("append").parquet(rejects_dir)
+                accepted.write.mode("append").parquet(corpus_dir)
+                extend_dedup_index(accepted, index_dir, token=token)
+            if near_policy == "label":
+                t_lbl = time.perf_counter()
+                fold_stats: dict = {}
+                if label_cadence <= 1:
+                    _extend_labels(batch_df, rejected, fold_stats)
+                else:
+                    _spool_delta(batch_df, rejected, token)
+                    if _pending_segment_count(index_dir) >= label_cadence:
+                        fold_pending_labels(
+                            spark, index_dir, corpus_dir, stats=fold_stats
+                        )
+                layout_event = _auto_layout(fold_stats)
+                label_sec = round(time.perf_counter() - t_lbl, 3)
+
+        committed.add(batch_id)
+        index_layout.publish(
+            committed_path, "".join(f"{b}\n" for b in sorted(committed)), write
+        )
         if (
             index_compact_cadence is not None
-            and len(_committed()) % index_compact_cadence == 0
+            and len(committed) % index_compact_cadence == 0
         ):
             # small-files hygiene on a cadence (every extend appends a
             # few files; after thousands of batches the probe pays the
-            # per-file open tax). Runs AFTER the ledger write: compaction
+            # per-file open tax). Runs AFTER the ledger publish: compaction
             # is a pure rewrite-and-flip, idempotent and crash-safe by
             # the manifest protocol, so replay interplay is a non-issue —
             # keyed to the committed count, a replayed batch (no-op,
@@ -1002,7 +1009,7 @@ def run_dedup_ingest_pipeline(
     def _auto_layout(fold_stats: dict):
         """Observe the fold just run and migrate the label layout when
         the policy says the regime changed (VERDICT r11 next #3). Runs
-        BEFORE the ledger write: a crash mid-migration is absorbed by
+        BEFORE the ledger publish: a crash mid-migration is absorbed by
         write_label_snapshot's atomic pointer commit, and the replayed
         batch re-folds (idempotent) and re-decides. Returns the new
         bucket count (0 = monolithic) when a migration happened, else

@@ -33,6 +33,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cdc_worker_spark.operators import index_layout
 from cdc_worker_spark.streaming.envelope import ENVELOPE_SCHEMA, decode_envelope
 
 
@@ -69,21 +70,25 @@ def read_event_stream(
 
 
 @dataclass
-class LatestWinsState:
-    """Bucketed, manifest-versioned parquet latest-wins table (the
-    foreachBatch MERGE target).
+class BucketedTable:
+    """Bucketed, manifest-versioned, copy-on-write parquet table — the
+    storage shared by the latest-wins state and the SCD2 dimension.
 
     Layout: ``path/v{N}/_bucket={K}/*.parquet`` — rows land in bucket
-    ``pmod(xxhash64(entity, record_id), n_buckets)``. ``_MANIFEST.json``
-    maps each bucket to the version directory holding its latest data, so a
-    merge that touches 1 bucket writes 1 bucket and repoints 1 manifest
+    ``pmod(xxhash64(*bucket_key), n_buckets)``. ``_MANIFEST.json`` maps
+    each bucket to the version directory holding its latest data, so a
+    commit that touches 1 bucket writes 1 bucket and repoints 1 manifest
     entry; untouched buckets keep serving their old files (the same
-    copy-on-write shape as a Delta/Iceberg transaction log). Stored rows
-    INCLUDE DELETE tombstones; :meth:`read` is the live view.
+    copy-on-write shape as a Delta/Iceberg transaction log). Every commit
+    also leaves ``_MANIFEST.v{N}.json``, the snapshot time travel reads.
+    Subclasses set ``bucket_key`` and, optionally, a read ``schema``.
     """
 
     path: str
     n_buckets: int = 16
+
+    bucket_key = ()
+    schema = None
 
     def _manifest_file(self) -> str:
         return os.path.join(self.path, "_MANIFEST.json")
@@ -107,13 +112,6 @@ class LatestWinsState:
                 ) from None
             return {"version": -1, "n_buckets": self.n_buckets, "buckets": {}}
 
-    def _write_manifest(self, manifest: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._manifest_file() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_file())
-
     def _bucket_paths(self, manifest: dict, buckets=None) -> list[str]:
         items = manifest["buckets"].items()
         if buckets is not None:
@@ -130,36 +128,29 @@ class LatestWinsState:
         it with a different constructor default and hashing with the wrong
         modulus would read the wrong bucket subset (latest-wins could lose to
         unread stored rows) and repoint manifest entries at data-less bucket
-        dirs. Called at the top of merge_latest_wins — BEFORE bucket_col()
-        and read_full() — so the whole merge runs under one layout
+        dirs. Called at the top of every merge — BEFORE bucket_col() and
+        read_full() — so the whole merge runs under one layout
         (ADVICE r02)."""
         manifest = self._manifest()
         if manifest["buckets"] and manifest["n_buckets"] != self.n_buckets:
             self.n_buckets = manifest["n_buckets"]
 
     def bucket_col(self) -> Column:
-        return F.pmod(F.xxhash64("entity", "record_id"), F.lit(self.n_buckets))
+        return F.pmod(F.xxhash64(*self.bucket_key), F.lit(self.n_buckets))
 
     def read_full(
         self, spark: SparkSession, buckets=None, at_version: int | None = None
     ) -> DataFrame | None:
-        """All stored rows (tombstones included) — optionally only the given
-        buckets (the merge path reads just the buckets a batch touches), or
-        the table AS OF an earlier committed version (time travel via the
-        per-version manifest snapshot; valid until vacuum reclaims the old
-        files, exactly the Delta VACUUM contract)."""
-        manifest = self._manifest(at_version)
-        paths = self._bucket_paths(manifest, buckets)
+        """All stored rows — optionally only the given buckets (a merge
+        reads just the buckets a batch touches), or the table AS OF an
+        earlier committed version (time travel via the per-version manifest
+        snapshot; valid until vacuum reclaims the old files, exactly the
+        Delta VACUUM contract)."""
+        paths = self._bucket_paths(self._manifest(at_version), buckets)
         if not paths:
             return None
-        return spark.read.parquet(*paths)
-
-    def read(
-        self, spark: SparkSession, at_version: int | None = None
-    ) -> DataFrame | None:
-        """Live view: tombstoned (deleted) keys filtered out."""
-        df = self.read_full(spark, at_version=at_version)
-        return None if df is None else df.filter(F.col("change_type") != "DELETE")
+        reader = spark.read if self.schema is None else spark.read.schema(self.schema)
+        return reader.parquet(*paths)
 
     def vacuum(self) -> list[str]:
         """Delete version directories no manifest entry references (each
@@ -173,23 +164,20 @@ class LatestWinsState:
         import shutil
 
         manifest = self._manifest()
-        if os.path.isdir(self.path):
-            for d in os.listdir(self.path):
-                if (
-                    d.startswith("_MANIFEST.v")
-                    and d != f"_MANIFEST.v{manifest['version']}.json"
-                ):
-                    os.remove(os.path.join(self.path, d))
+        try:
+            entries = os.listdir(self.path)
+        except FileNotFoundError:
+            return []
         live: dict[str, set[str]] = {}
         for b, v in manifest["buckets"].items():
             live.setdefault(f"v{v}", set()).add(f"_bucket={b}")
         removed = []
-        try:
-            entries = os.listdir(self.path)
-        except FileNotFoundError:
-            return removed
         for d in entries:
             full = os.path.join(self.path, d)
+            if d.startswith("_MANIFEST.v"):
+                if d != f"_MANIFEST.v{manifest['version']}.json":
+                    os.remove(full)
+                continue
             if not (d.startswith("v") and os.path.isdir(full)):
                 continue
             if d not in live:
@@ -203,40 +191,59 @@ class LatestWinsState:
                     removed.append(subfull)
         return removed
 
-    def write_buckets(self, df: DataFrame, touched: list[int]) -> None:
+    def write_buckets(
+        self, df: DataFrame, touched: list[int], extra: dict | None = None
+    ) -> None:
         """Commit ``df`` (rows of exactly the ``touched`` buckets) as a new
         version: write those bucket partitions, repoint their manifest
-        entries, leave every other bucket untouched."""
+        entries, leave every other bucket untouched. ``extra`` fields join
+        the manifest in the same publish (SCD2 commits its batch ids
+        with its data)."""
         manifest = self._manifest()
         if manifest["buckets"] and manifest["n_buckets"] != self.n_buckets:
             # layout mismatch mid-commit means bucket_col()/read_full already
             # ran with the wrong modulus — refusing beats corrupting the
-            # store; callers go through merge_latest_wins, which syncs first
+            # store; callers go through a merge, which syncs first
             raise ValueError(
                 f"store at {self.path} has n_buckets="
                 f"{manifest['n_buckets']}, writer has {self.n_buckets}; "
                 f"call sync_layout() before computing buckets"
             )
         v = manifest["version"] + 1
-        (
-            df.withColumn("_bucket", self.bucket_col())
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(os.path.join(self.path, f"v{v}"))
-        )
-        manifest["version"] = v
-        manifest["n_buckets"] = self.n_buckets
+        manifest.update(extra or {}, version=v, n_buckets=self.n_buckets)
         for b in touched:
             manifest["buckets"][str(b)] = v
-        # per-version snapshot FIRST (tmp + atomic replace), THEN the main
-        # manifest: every version the main manifest can ever point at has a
-        # live AS-OF snapshot — the reverse order left a crash window where
-        # read(at_version=current) raised on a committed version (ADVICE r02)
-        snap = os.path.join(self.path, f"_MANIFEST.v{v}.json")
-        with open(snap + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(snap + ".tmp", snap)
-        self._write_manifest(manifest)
+
+        def write() -> None:
+            if touched:
+                (
+                    df.withColumn("_bucket", self.bucket_col())
+                    .write.mode("overwrite")
+                    .partitionBy("_bucket")
+                    .parquet(os.path.join(self.path, f"v{v}"))
+                )
+            # the AS-OF snapshot lands before the manifest, so every version
+            # the manifest can ever point at has one (ADVICE r02)
+            index_layout.publish(
+                os.path.join(self.path, f"_MANIFEST.v{v}.json"), manifest
+            )
+
+        index_layout.publish(self._manifest_file(), manifest, write=write)
+
+
+class LatestWinsState(BucketedTable):
+    """The foreachBatch MERGE target: a :class:`BucketedTable` keyed by
+    (entity, record_id). Stored rows INCLUDE DELETE tombstones;
+    :meth:`read` is the live view."""
+
+    bucket_key = ("entity", "record_id")
+
+    def read(
+        self, spark: SparkSession, at_version: int | None = None
+    ) -> DataFrame | None:
+        """Live view: tombstoned (deleted) keys filtered out."""
+        df = self.read_full(spark, at_version=at_version)
+        return None if df is None else df.filter(F.col("change_type") != "DELETE")
 
 
 def _latest_per_key(df: DataFrame) -> DataFrame:

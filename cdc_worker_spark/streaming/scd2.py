@@ -10,11 +10,11 @@ the same decoded change stream.
 
 Design (the same shapes the rest of the streaming layer uses):
 - storage: bucketed manifest-versioned parquet, copy-on-write per touched
-  bucket (the streaming/pipeline.LatestWinsState layout — a merge that
-  touches 1 bucket writes 1 bucket);
-- idempotence: a committed-batch ledger (streaming/ingest.py pattern)
-  makes foreachBatch replays no-ops, so interval counts never
-  double-count;
+  bucket (streaming/pipeline.BucketedTable, the table LatestWinsState
+  also is — a merge that touches 1 bucket writes 1 bucket);
+- idempotence: the committed batch ids ride in the manifest publish that
+  commits the data, which makes foreachBatch replays no-ops, so interval
+  counts never double-count;
 - the stitch itself is pure DataFrame algebra: stored intervals ARE runs,
   so "merge stored history with a new batch" = union the stored runs of
   TOUCHED entities with the batch's collapsed runs, then re-run the
@@ -29,11 +29,9 @@ batch any order is fine — the collapse sorts by (ts_ms, event_id).
 
 from __future__ import annotations
 
-import json
 import os
-from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -41,6 +39,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from cdc_worker_spark.streaming.pipeline import BucketedTable
 
 #: on-disk layout version. v1 had no anchor_id column; v2 (current) added
 #: it as the deterministic restitch tiebreak. Reading v1 state with the v2
@@ -136,28 +136,18 @@ def _restitch(runs: DataFrame) -> DataFrame:
     )
 
 
-@dataclass
-class Scd2State:
-    """Bucketed manifest-versioned SCD2 dimension table (copy-on-write per
-    touched bucket, same layout family as LatestWinsState)."""
+class Scd2State(BucketedTable):
+    """The SCD2 dimension table: a :class:`BucketedTable` keyed by user_id
+    whose manifest also carries the layout version and the committed batch
+    ids. Every stored interval row is live, so :meth:`read` is the full
+    table."""
 
-    path: str
-    n_buckets: int = 16
+    bucket_key = ("user_id",)
+    schema = SCD2_SCHEMA
+    read = BucketedTable.read_full
 
-    def _manifest_file(self) -> str:
-        return os.path.join(self.path, "_MANIFEST.json")
-
-    def _manifest(self) -> dict:
-        try:
-            with open(self._manifest_file()) as f:
-                manifest = json.load(f)
-        except FileNotFoundError:
-            return {
-                "version": -1,
-                "n_buckets": self.n_buckets,
-                "buckets": {},
-                "layout": SCD2_LAYOUT_VERSION,
-            }
+    def _manifest(self, at_version: int | None = None) -> dict:
+        manifest = super()._manifest(at_version)
         # a manifest with data but no layout marker predates v2 (anchor_id)
         layout = manifest.get("layout", 1 if manifest["buckets"] else SCD2_LAYOUT_VERSION)
         if layout != SCD2_LAYOUT_VERSION:
@@ -171,38 +161,10 @@ class Scd2State:
         manifest["layout"] = layout
         return manifest
 
-    def _write_manifest(self, manifest: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._manifest_file() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_file())
-
-    def sync_layout(self) -> None:
-        manifest = self._manifest()
-        if manifest["buckets"] and manifest["n_buckets"] != self.n_buckets:
-            self.n_buckets = manifest["n_buckets"]
-
-    def bucket_col(self) -> Column:
-        return F.pmod(F.xxhash64("user_id"), F.lit(self.n_buckets))
-
-    def read(self, spark: SparkSession, buckets=None) -> DataFrame | None:
-        manifest = self._manifest()
-        items = manifest["buckets"].items()
-        if buckets is not None:
-            want = {str(b) for b in buckets}
-            items = [(b, v) for b, v in items if b in want]
-        paths = [
-            os.path.join(self.path, f"v{v}", f"_bucket={b}") for b, v in items
-        ]
-        if not paths:
-            return None
-        return spark.read.schema(SCD2_SCHEMA).parquet(*paths)
-
     def committed_batch_ids(self) -> set[int]:
         """Batch ids already folded into the stored history. Recorded in
-        the SAME manifest os.replace that publishes the data, so "state
-        merged" and "batch committed" are one atomic step — no
+        the SAME manifest publish that commits the data, so "state merged"
+        and "batch committed" are one atomic step — no
         crash-between-two-writes replay corruption (a separate ledger file
         had exactly that window)."""
         return set(self._manifest().get("committed_batch_ids", []))
@@ -217,10 +179,14 @@ class Scd2State:
         touched buckets rewrite under a new manifest version. When
         ``batch_id`` is given, the merge is exactly-once: an id already in
         the manifest's committed set is a no-op, and the id is committed
-        by the same atomic manifest replace that publishes the buckets."""
+        by the same manifest publish that commits the buckets."""
         self.sync_layout()
-        if batch_id is not None and batch_id in self.committed_batch_ids():
-            return
+        extra = {}
+        if batch_id is not None:
+            committed = self.committed_batch_ids()
+            if batch_id in committed:
+                return
+            extra["committed_batch_ids"] = sorted(committed | {int(batch_id)})
         batch_runs = collapse_runs(batch).localCheckpoint(eager=True)
         touched = sorted(
             r[0]
@@ -228,50 +194,19 @@ class Scd2State:
             .distinct()
             .collect()
         )
-        if not touched:
-            if batch_id is not None:
-                manifest = self._manifest()
-                ids = set(manifest.get("committed_batch_ids", []))
-                ids.add(int(batch_id))
-                manifest["committed_batch_ids"] = sorted(ids)
-                self._write_manifest(manifest)
+        if not touched and batch_id is None:
             return
         stored = self.read(spark, buckets=touched)
-        stored_runs = (
-            stored.select(
-                "user_id", "event_type", "valid_from_ms", "n_events", "anchor_id"
-            )
-            if stored is not None
-            else None
-        )
         all_runs = (
             batch_runs
-            if stored_runs is None
-            else stored_runs.unionByName(batch_runs)
+            if stored is None
+            else stored.select(
+                "user_id", "event_type", "valid_from_ms", "n_events", "anchor_id"
+            ).unionByName(batch_runs)
         )
-        new_rows = _restitch(all_runs).withColumn("_bucket", self.bucket_col())
-        # only rows whose bucket is touched belong here (stored read was
-        # already bucket-pruned, so this is a no-op guard)
-        manifest = self._manifest()
-        new_version = manifest["version"] + 1
-        out_dir = os.path.join(self.path, f"v{new_version}")
-        (
-            new_rows.filter(F.col("_bucket").isin([int(b) for b in touched]))
-            .repartition("_bucket")
-            .write.partitionBy("_bucket")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        manifest["version"] = new_version
-        manifest["n_buckets"] = self.n_buckets
-        manifest["layout"] = SCD2_LAYOUT_VERSION
-        for b in touched:
-            manifest["buckets"][str(b)] = new_version
-        if batch_id is not None:
-            ids = set(manifest.get("committed_batch_ids", []))
-            ids.add(int(batch_id))
-            manifest["committed_batch_ids"] = sorted(ids)
-        self._write_manifest(manifest)
+        # one task per touched bucket: one file per bucket directory
+        new_rows = _restitch(all_runs).repartition(self.bucket_col())
+        self.write_buckets(new_rows, touched, extra)
 
 
 def run_scd2_pipeline(
@@ -284,7 +219,7 @@ def run_scd2_pipeline(
 ):
     """Stream jsonl change events (user_id, event_type, ts_ms, event_id)
     into an incrementally-maintained SCD2 dimension. foreachBatch with the
-    batch id committed INSIDE the state manifest (one os.replace publishes
+    batch id committed INSIDE the state manifest (one publish commits
     buckets + commit record together) = exactly-once interval counts under
     replay, with no crash window between "merged" and "recorded"."""
     os.makedirs(checkpoint_dir, exist_ok=True)
