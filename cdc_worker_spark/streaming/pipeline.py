@@ -22,6 +22,16 @@ O(touched buckets), not O(|state|) — and DELETEs are retained as tombstone
 rows (filtered out of the live view, garbage-collected past the retention
 horizon) so a late out-of-order pre-delete event cannot resurrect a deleted
 record.
+
+Merge plan: the merge shuffles once, on the state bucket. The stored rows of
+the touched buckets and the batch are hash-partitioned on ``_bucket`` into as
+many tasks as touched buckets, each bucket in exactly one task; the
+latest-per-key window runs partitioned by (``_bucket``, key), so that
+exchange serves both the window and the ``partitionBy("_bucket")`` writer,
+and a commit writes one file per touched bucket. The DLQ append is one task
+and one file per micro-batch. Spark turns AQE off inside streaming
+micro-batches, so nothing coalesces a static ``spark.sql.shuffle.partitions``
+plan there: the plan sizes its own partitions.
 """
 
 from __future__ import annotations
@@ -82,6 +92,12 @@ class BucketedTable:
     copy-on-write shape as a Delta/Iceberg transaction log). Every commit
     also leaves ``_MANIFEST.v{N}.json``, the snapshot time travel reads.
     Subclasses set ``bucket_key`` and, optionally, a read ``schema``.
+
+    A commit writes one file per touched bucket: writers pass their rows
+    through :meth:`cluster`, which shuffles once on the bucket into as many
+    tasks as touched buckets, each bucket in exactly one task. AQE is off
+    inside streaming micro-batches, so that partition count is the plan's
+    own; nothing coalesces it later.
     """
 
     path: str
@@ -137,6 +153,12 @@ class BucketedTable:
 
     def bucket_col(self) -> Column:
         return F.pmod(F.xxhash64(*self.bucket_key), F.lit(self.n_buckets))
+
+    def cluster(self, df: DataFrame, touched: list[int]) -> DataFrame:
+        """``df`` tagged with ``_bucket``, hash-partitioned on it into len(touched)
+        tasks: each bucket sits in one task, so one file in :meth:`write_buckets`."""
+        n = max(1, len(touched))
+        return df.withColumn("_bucket", self.bucket_col()).repartition(n, "_bucket")
 
     def read_full(
         self, spark: SparkSession, buckets=None, at_version: int | None = None
@@ -194,11 +216,11 @@ class BucketedTable:
     def write_buckets(
         self, df: DataFrame, touched: list[int], extra: dict | None = None
     ) -> None:
-        """Commit ``df`` (rows of exactly the ``touched`` buckets) as a new
-        version: write those bucket partitions, repoint their manifest
-        entries, leave every other bucket untouched. ``extra`` fields join
-        the manifest in the same publish (SCD2 commits its batch ids
-        with its data)."""
+        """Commit ``df`` (rows of exactly the ``touched`` buckets, out of
+        :meth:`cluster`) as a new version: write those bucket partitions,
+        repoint their manifest entries, leave every other bucket untouched.
+        ``extra`` fields join the manifest in the same publish (SCD2 commits
+        its batch ids with its data)."""
         manifest = self._manifest()
         if manifest["buckets"] and manifest["n_buckets"] != self.n_buckets:
             # layout mismatch mid-commit means bucket_col()/read_full already
@@ -216,11 +238,8 @@ class BucketedTable:
 
         def write() -> None:
             if touched:
-                (
-                    df.withColumn("_bucket", self.bucket_col())
-                    .write.mode("overwrite")
-                    .partitionBy("_bucket")
-                    .parquet(os.path.join(self.path, f"v{v}"))
+                df.write.mode("overwrite").partitionBy("_bucket").parquet(
+                    os.path.join(self.path, f"v{v}")
                 )
             # the AS-OF snapshot lands before the manifest, so every version
             # the manifest can ever point at has one (ADVICE r02)
@@ -248,8 +267,10 @@ class LatestWinsState(BucketedTable):
 
 def _latest_per_key(df: DataFrame) -> DataFrame:
     """D7 ordered apply collapsed to its effect: the latest row per record key
-    by (commit_ts, replay_id) — sort within key, never a global sort."""
-    w = Window.partitionBy("entity", "record_id").orderBy(
+    by (commit_ts, replay_id) — sort within key, never a global sort. The
+    window partitions by (``_bucket``, key), which the bucket exchange of
+    :meth:`BucketedTable.cluster` already satisfies."""
+    w = Window.partitionBy("_bucket", "entity", "record_id").orderBy(
         F.col("commit_ts").desc(), F.col("replay_id").desc()
     )
     return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
@@ -281,24 +302,21 @@ def merge_latest_wins(
     """
     spark = batch_df.sparkSession
     state.sync_layout()  # stored layout wins BEFORE any bucket hashing
-    batch_latest = _latest_per_key(batch_df).withColumn(
-        "_bucket", state.bucket_col()
-    )
     # one tiny driver-side agg: which buckets does this batch touch, and the
-    # batch's max event time (the GC horizon anchor) — <= n_buckets values
-    stats = batch_latest.agg(
-        F.collect_set("_bucket").alias("buckets"), F.max("commit_ts").alias("max_ts")
+    # batch's max event time (the GC horizon anchor) — <= n_buckets values.
+    # Both are the same before and after latest-per-key, so they come
+    # straight from the batch, with no window shuffle
+    stats = batch_df.agg(
+        F.collect_set(state.bucket_col()).alias("buckets"),
+        F.max("commit_ts").alias("max_ts"),
     ).collect()[0]
     touched = sorted(stats.buckets or [])
     if not touched:
         return
-    batch_latest = batch_latest.drop("_bucket")
     existing = state.read_full(spark, buckets=touched)
-    merged = (
-        batch_latest
-        if existing is None
-        else _latest_per_key(existing.unionByName(batch_latest))
-    )
+    rows = batch_df if existing is None else existing.unionByName(batch_df)
+    # the one shuffle: each touched bucket is merged and written by one task
+    merged = _latest_per_key(state.cluster(rows, touched))
     if tombstone_retention_hours is not None and stats.max_ts is not None:
         horizon = F.lit(stats.max_ts) - F.expr(
             f"INTERVAL {int(tombstone_retention_hours * 3600)} SECONDS"
@@ -408,9 +426,11 @@ def run_cdc_pipeline(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
         try:
-            # C4/D10: corrupt events to the dead-letter table, stream continues
+            # C4/D10: corrupt events to the dead-letter table, stream
+            # continues; one task and one file per micro-batch
             (
                 batch_df.filter("is_corrupt")
+                .coalesce(1)
                 .select(
                     "replay_id",
                     F.col("schema_id"),

@@ -204,9 +204,7 @@ class Scd2State(BucketedTable):
                 "user_id", "event_type", "valid_from_ms", "n_events", "anchor_id"
             ).unionByName(batch_runs)
         )
-        # one task per touched bucket: one file per bucket directory
-        new_rows = _restitch(all_runs).repartition(self.bucket_col())
-        self.write_buckets(new_rows, touched, extra)
+        self.write_buckets(self.cluster(_restitch(all_runs), touched), touched, extra)
 
 
 def run_scd2_pipeline(

@@ -9,9 +9,11 @@ design doc:670-676)."""
 from __future__ import annotations
 
 import datetime as dt
+import glob
 import os
 from decimal import Decimal
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdc_worker_spark.streaming import LatestWinsState, merge_latest_wins
@@ -110,6 +112,84 @@ def test_incremental_merge_rewrites_only_touched_buckets(spark, tmp_path):
     assert got["K7"].payload == "v7"  # untouched bucket rows intact
 
 
+@pytest.fixture()
+def micro_batch_planning(spark):
+    """Plan as inside a streaming micro-batch, where Spark turns AQE off and
+    nothing coalesces the static shuffle partitions."""
+    was = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    yield
+    spark.conf.set("spark.sql.adaptive.enabled", was)
+
+
+def parquet_files(root, version, bucket):
+    bucket_dir = os.path.join(root, f"v{version}", f"_bucket={bucket}")
+    return glob.glob(os.path.join(bucket_dir, "*.parquet"))
+
+
+def test_commit_writes_one_file_per_touched_bucket(
+    spark, tmp_path, micro_batch_planning
+):
+    """Every bucket a commit writes holds exactly one file, in the first
+    commit and in one that touches a subset of buckets; reads are intact."""
+    root = str(tmp_path / "state")
+    state = LatestWinsState(root)
+    merge_latest_wins(
+        state, batch(spark, [(i, i, f"K{i}", "CREATE", f"v{i}") for i in range(200)])
+    )
+    # second batch: a few keys, so only a subset of the 16 buckets is touched
+    updated = range(0, 200, 41)
+    merge_latest_wins(
+        state, batch(spark, [(1000 + i, 1000 + i, f"K{i}", "UPDATE", "u") for i in updated])
+    )
+    written = {
+        v: [b for b, bv in state._manifest(v)["buckets"].items() if bv == v]
+        for v in (0, 1)
+    }
+    assert len(written[0]) == 16 and 0 < len(written[1]) < 16
+    for v in (0, 1):
+        dirs = os.listdir(os.path.join(root, f"v{v}"))
+        assert sorted(d for d in dirs if d.startswith("_bucket=")) == sorted(
+            f"_bucket={b}" for b in written[v]
+        )
+        for b in written[v]:
+            assert len(parquet_files(root, v, b)) == 1, (v, b)
+    got = live(spark, state)
+    assert len(got) == 200
+    assert {k for k, r in got.items() if r.payload == "u"} == {f"K{i}" for i in updated}
+    assert got["K7"].payload == "v7"
+
+
+def test_multi_file_bucket_becomes_one_file_on_next_touch(
+    spark, tmp_path, micro_batch_planning
+):
+    """A bucket in the old layout (several part files) needs no migration:
+    its next merge rewrites it as one file."""
+    root = str(tmp_path / "state")
+    state = LatestWinsState(root, n_buckets=4)
+    merge_latest_wins(
+        state, batch(spark, [(i, i, f"K{i}", "CREATE", f"v{i}") for i in range(40)])
+    )
+    bucket_dir = os.path.join(root, "v0", "_bucket=2")
+    old = spark.read.parquet(bucket_dir)
+    rows, schema = old.collect(), old.schema
+    spark.createDataFrame(rows, schema).repartition(3).write.mode("overwrite").parquet(
+        bucket_dir
+    )
+    assert len(parquet_files(root, 0, 2)) == 3
+    before = live(spark, state)
+
+    key = sorted(r.record_id for r in rows)[0]
+    merge_latest_wins(state, batch(spark, [(500, 500, key, "UPDATE", "new")]))
+    assert state._manifest()["buckets"]["2"] == 1
+    assert len(parquet_files(root, 1, 2)) == 1
+    got = live(spark, state)
+    assert got[key].payload == "new"
+    assert {k: r for k, r in got.items() if k != key} == {
+        k: r for k, r in before.items() if k != key
+    }
+
+
 def test_touched_bucket_merge_is_latest_wins_within_bucket(spark, tmp_path):
     """The merged bucket re-runs latest-wins over existing ∪ batch: stale
     batch rows lose to stored rows sharing their bucket."""
@@ -174,8 +254,6 @@ def test_crash_between_data_write_and_manifest_is_invisible(spark, tmp_path):
 def test_time_travel_reads_earlier_version(spark, tmp_path):
     """AS-OF reads: each merge snapshots its manifest, so the table can be
     read at any earlier committed version until vacuum reclaims it."""
-    import pytest
-
     state = LatestWinsState(str(tmp_path / "state"), n_buckets=2)
     merge_latest_wins(state, batch(spark, [(1, 0, "A", "CREATE", "v1")]))
     v0 = state._manifest()["version"]

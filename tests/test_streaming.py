@@ -5,6 +5,7 @@ restart without loss or duplication (A3/A6)."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -70,6 +71,9 @@ def test_latest_wins_delete_and_dlq(spark, dirs):
                           city="San Francisco"),
             make_envelope(103, record_id="B", change_type="DELETE", commit_ts=t0 + 3),
             make_envelope(104, corrupt=True),
+            # more corrupt payloads in the same batch: the dedup exchange
+            # spreads them over several partitions
+            *(make_envelope(r, corrupt=True) for r in range(105, 111)),
         ],
     )
     run_drain(spark, dirs)
@@ -80,8 +84,13 @@ def test_latest_wins_delete_and_dlq(spark, dirs):
     assert state["A"].event.BillingAddress.City == "San Francisco"
 
     dlq = spark.read.parquet(dirs["dlq"]).collect()
-    assert len(dlq) == 1 and int(dlq[0].replay_id) == 104
-    assert dlq[0].error == "payload JSON decode failed"
+    assert sorted(int(r.replay_id) for r in dlq) == list(range(104, 111))
+    assert {r.error for r in dlq} == {"payload JSON decode failed"}
+    # the DLQ append is one task and one file per micro-batch (the committed
+    # batches include no-data batches run for watermark advances)
+    commits = os.listdir(os.path.join(dirs["chk"], "commits"))
+    batches = [f for f in commits if f.isdigit()]
+    assert len(glob.glob(os.path.join(dirs["dlq"], "*.parquet"))) <= len(batches)
 
 
 def test_checkpoint_restart_resumes_without_loss_or_dup(spark, dirs):
